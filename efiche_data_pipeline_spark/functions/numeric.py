@@ -36,15 +36,29 @@ def money_sum(col: str | Column) -> Column:
     return F.sum(c.cast(MONEY_DECIMAL)).cast("double")
 
 
+# Scale of the exact AVG quotient: 18 places leave 20 integer digits
+# for the sum, and rounding the quotient to ``scale`` afterwards can
+# only differ from rounding the exact rational well below double
+# precision.
+_AVG_DECIMAL = "decimal(38,18)"
+
+
 def money_avg(col: str | Column, n: Column | None = None, scale: int = 2) -> Column:
     """Exact-sum-based AVG rounded to ``scale``: round(sum_dec / count, s).
 
     Oracle-SQL equivalent:
     ``ROUND(CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*), s)``.
+
+    The quotient is rounded as a DECIMAL and only then cast to double:
+    Spark's ``round`` of a double rounds its exact binary value, so a
+    half-way average such as 3571.60 / 80 = 44.645 (stored as
+    44.64499…) would round down to 44.64, while DuckDB's ROUND of the
+    same double lands on 44.65, the half-up value.
     """
     c = F.col(col) if isinstance(col, str) else col
     count = n if n is not None else F.count(F.lit(1))
-    return F.round(money_sum(c) / count, scale)
+    quotient = F.sum(c.cast(MONEY_DECIMAL)).cast(_AVG_DECIMAL) / count
+    return F.round(quotient, scale).cast("double")
 
 
 def oracle_money_sum(expr: str) -> str:

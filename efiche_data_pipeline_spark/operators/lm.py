@@ -60,6 +60,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from .watermark import check_monotone_ids
 
 LM_LAMBDA = 0.8  # bigram interpolation weight (oracle SQL mirrors it)
 
@@ -543,23 +544,7 @@ def calibrate_quality_gate(
 
     if new_ref_docs is not None:
         batch = new_ref_docs.select(id_col, text_col).localCheckpoint(eager=True)
-        if store.current_version(model_table) is not None and store.exists(
-            ref_table
-        ):
-            wm = (
-                store.read_union(model_table)
-                .agg(F.max("batch_max_id"))
-                .first()[0]
-            )
-            unseen_low = batch.filter(F.col(id_col) <= wm).join(
-                store.read(ref_table).select(id_col), id_col, "left_anti"
-            )
-            if unseen_low.count() > 0:
-                raise ValueError(
-                    f"monotone-{id_col} contract violated: the reference "
-                    f"batch carries never-seen ids at or below the model "
-                    f"watermark {wm} — feed reference drops in id order."
-                )
+        check_monotone_ids(store, batch, id_col, model_table, ref_table)
         store.append_new(batch, ref_table, key=id_col)
         incremental_lm(
             batch, store, id_col=id_col, text_col=text_col, model_table=model_table

@@ -500,28 +500,9 @@ class Store:
         except (FileNotFoundError, ValueError):
             return None
 
-    def _heal_legacy_versions(self, table: str) -> None:
-        """Migrate a store written by the pre-round-6 layout, whose
-        version directories were named ``_v<N>``: without this, such a
-        table reports ``versions() == []`` while ``_CURRENT`` points at
-        a version whose ``v<N>`` dir doesn't exist — ``read_version``
-        fails confusingly and a writer would re-claim slot 1. The
-        rename is cheap, idempotent, and safe under the single-writer
-        contract; a ``v<N>`` dir already present wins (never
-        clobbered)."""
-        root = self.path(table)
-        if not os.path.isdir(root):
-            return
-        for d in os.listdir(root):
-            if d.startswith("_v") and d[2:].isdigit():
-                new = os.path.join(root, d[1:])
-                if not os.path.exists(new):
-                    os.rename(os.path.join(root, d), new)
-
     def versions(self, table: str) -> list[int]:
         """Committed snapshot versions (those at or below the pointer,
         plus any older ones not yet vacuumed)."""
-        self._heal_legacy_versions(table)
         root = self.path(table)
         if not os.path.isdir(root):
             return []
@@ -568,7 +549,6 @@ class Store:
     def read_version(self, table: str, version: int | None = None) -> DataFrame:
         """Read a snapshot — the current one by default, or any
         still-vacuumed-in historical ``version`` (time travel)."""
-        self._heal_legacy_versions(table)
         v = version if version is not None else self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"{table}: no versioned snapshots")
@@ -798,7 +778,6 @@ class Store:
         the union of exactly the layers its manifest pins — orphaned
         forward history after a rollback is invisible, same contract
         as :meth:`read_version`."""
-        self._heal_legacy_versions(table)
         v = version if version is not None else self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"{table}: no committed versions")

@@ -19,7 +19,10 @@ from ..sources.catalog import register_views
 
 # money_sum / money_avg in Spark-SQL form (functions/numeric.py).
 _MS = "CAST(SUM(CAST({x} AS DECIMAL(38,6))) AS DOUBLE)"
-_MA = "ROUND(" + _MS + " / COUNT(*), {s})"
+_MA = (
+    "CAST(ROUND(CAST(SUM(CAST({x} AS DECIMAL(38,6))) AS DECIMAL(38,18))"
+    " / COUNT(*), {s}) AS DOUBLE)"
+)
 
 
 def _ms(x: str) -> str:

@@ -83,12 +83,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
-    # temporary A/B hook for this optimization round's coalescing
-    # experiment; removed/hardcoded once measured
-    _ab = os.environ.get("SPARK_GRAFT_AB_CONF", "")
-    for kv in filter(None, _ab.split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k, v)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import boilerplate_report, incremental_chunk_index
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -53,29 +54,21 @@ def run_chunk_stream(
     documents are chunked ONCE and folded id-keyed into the persisted
     index; the returned report reflects every file seen across all
     runs of this checkpoint."""
-    totals = {"batches": 0, "docs": 0}
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
-        totals["docs"] += incremental_chunk_index(
+    def fold(batch: DataFrame, batch_id: int) -> int:
+        return incremental_chunk_index(
             batch, store, table=table, id_col=id_col, text_col=text_col,
             mod=mod,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     return ChunkStreamReport(
-        n_batches=totals["batches"],
-        n_docs_folded=totals["docs"],
+        n_batches=run.n_batches,
+        n_docs_folded=sum(run.outputs),
         report=(
             boilerplate_report(store.read(table), id_col, min_docs)
             if store.exists(table)

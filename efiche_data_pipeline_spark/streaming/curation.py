@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import predict_lang, quality_score_raw, token_count
+from .driver import parquet_stream
 
 DOCS_STREAM_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -34,11 +35,7 @@ DOCS_STREAM_SCHEMA = (
 def stream_documents(
     spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
+    return parquet_stream(spark, source_dir, DOCS_STREAM_SCHEMA, max_files_per_trigger)
 
 
 def curated_stream(docs: DataFrame, min_quality: float = 0.18) -> DataFrame:

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.dedup import incremental_minhash_dedup
 from ..pipeline.store import Store
 from .curation import stream_documents
+from .driver import run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -111,10 +112,7 @@ def run_incremental_dedup_stream(
     when running both methods against one store."""
     if method not in ("minhash", "simhash"):
         raise ValueError(f"unknown dedup method {method!r}")
-    totals = {"batches": 0, "new": 0, "dropped": 0}
-
-    def dedup_batch(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
+    def dedup_batch(batch: DataFrame, batch_id: int) -> tuple[int, int]:
         docs = batch.select("doc_id", "text")
         if canonicalize:
             from pyspark.sql import functions as F
@@ -153,7 +151,7 @@ def run_incremental_dedup_stream(
                 commit=False,
             )
         if res.n_new == 0:
-            return  # replayed batch: sink and index already converged
+            return 0, 0  # replayed batch: sink and index already converged
         # Sink BEFORE index commit (see module docstring); the kept
         # frame is consumed once here, then the O(batch) index DELTA
         # once — both derive from the operator's localCheckpointed
@@ -162,23 +160,18 @@ def run_incremental_dedup_stream(
         store.append_version(res.index_delta, index_table)
         if compact_every and store.layer_count(index_table) >= compact_every:
             store.compact_layers(index_table)
-        totals["new"] += res.n_new
-        totals["dropped"] += res.n_dup_vs_history + res.n_dup_within
+        return res.n_new, res.n_dup_vs_history + res.n_dup_within
 
-    q = (
-        stream_documents(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(dedup_batch)
-        .start()
+    run = run_fold_stream(
+        stream_documents(spark, source_dir, max_files_per_trigger),
+        checkpoint_dir,
+        dedup_batch,
     )
-    q.awaitTermination()
     v = store.current_version(index_table)
     return StreamDedupReport(
-        n_batches=totals["batches"],
-        n_new=totals["new"],
-        n_dropped=totals["dropped"],
+        n_batches=run.n_batches,
+        n_new=sum(new for new, _ in run.outputs),
+        n_dropped=sum(dropped for _, dropped in run.outputs),
         index_version=v if v is not None else 0,
         n_kept_total=store.count(kept_table),
     )

@@ -33,6 +33,7 @@ from ..functions.text import token_count
 from ..operators.drift import psi_from_bucket_counts
 from ..pipeline.store import Store
 from .curation import stream_documents
+from .driver import run_fold_stream
 
 _TOKEN_BUCKET_WIDTH = 50
 _TOKEN_BUCKET_MAX = 9
@@ -92,10 +93,7 @@ def run_drift_monitor(
         .withColumnRenamed("cnt", "c_ref")
         .localCheckpoint(eager=True)
     )
-    totals = {"batches": 0, "alarms": 0}
-
-    def score(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
+    def score(batch: DataFrame, batch_id: int) -> int:
         cur = doc_bucket_counts(batch).withColumnRenamed("cnt", "c_cur")
         per_bucket = (
             ref.join(cur, ["column_name", "bucket"], "full_outer")
@@ -111,20 +109,14 @@ def run_drift_monitor(
             .localCheckpoint(eager=True)  # consumed twice (merge + count)
         )
         store.merge_upsert(rep, table, keys=["batch_id", "column_name"])
-        totals["alarms"] += rep.filter("alarm").count()
+        return rep.filter("alarm").count()
 
-    q = (
-        stream_documents(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(score)
-        .start()
+    run = run_fold_stream(
+        stream_documents(spark, source_dir, max_files_per_trigger),
+        checkpoint_dir,
+        score,
     )
-    q.awaitTermination()
-    return DriftMonitorReport(
-        n_batches=totals["batches"], n_alarms=totals["alarms"]
-    )
+    return DriftMonitorReport(n_batches=run.n_batches, n_alarms=sum(run.outputs))
 
 
 def run_embedding_drift_monitor(
@@ -163,10 +155,7 @@ def run_embedding_drift_monitor(
         .agg(F.count(F.lit(1)).alias("c_ref"))
         .localCheckpoint(eager=True)
     )
-    totals = {"batches": 0, "alarms": 0}
-
-    def score(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
+    def score(batch: DataFrame, batch_id: int) -> int:
         cur = (
             assign_cells(batch, centroids, id_col, vec_col)
             .groupBy("cell_id")
@@ -189,17 +178,11 @@ def run_embedding_drift_monitor(
             .localCheckpoint(eager=True)  # consumed twice (merge + count)
         )
         store.merge_upsert(rep, table, keys=["batch_id", "column_name"])
-        totals["alarms"] += rep.filter("alarm").count()
+        return rep.filter("alarm").count()
 
-    q = (
-        stream_vectors(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(score)
-        .start()
+    run = run_fold_stream(
+        stream_vectors(spark, source_dir, max_files_per_trigger),
+        checkpoint_dir,
+        score,
     )
-    q.awaitTermination()
-    return DriftMonitorReport(
-        n_batches=totals["batches"], n_alarms=totals["alarms"]
-    )
+    return DriftMonitorReport(n_batches=run.n_batches, n_alarms=sum(run.outputs))

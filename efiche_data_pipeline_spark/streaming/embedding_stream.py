@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.similarity import incremental_embedding_dedup
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 VECS_STREAM_SCHEMA = "vec_id long, embedding array<double>"
 
@@ -44,11 +45,7 @@ VECS_STREAM_SCHEMA = "vec_id long, embedding array<double>"
 def stream_vectors(
     spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    return (
-        spark.readStream.schema(VECS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
+    return parquet_stream(spark, source_dir, VECS_STREAM_SCHEMA, max_files_per_trigger)
 
 
 @dataclass(frozen=True)
@@ -90,10 +87,8 @@ def run_incremental_embedding_stream(
     ``store.compact``/``overwrite_sorted`` as out-of-band maintenance
     when file counts warrant — the q104/q110 read path prunes to
     probed cell DIRECTORIES either way)."""
-    totals = {"batches": 0, "new": 0, "dropped": 0}
 
-    def dedup_batch(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
+    def dedup_batch(batch: DataFrame, batch_id: int) -> tuple[int, int]:
         res = incremental_embedding_dedup(
             batch.select("vec_id", "embedding"),
             store,
@@ -105,27 +100,22 @@ def run_incremental_embedding_stream(
             commit=False,
         )
         if res.n_new == 0:
-            return  # replayed batch: sink and index already converged
+            return 0, 0  # replayed batch: sink and index already converged
         store.append_new(res.kept.select("vec_id"), kept_table, key="vec_id")
         store.append_new(
             res.index_delta, index_table, key="vec_id", partition_by=["cell_id"]
         )
-        totals["new"] += res.n_new
-        totals["dropped"] += res.n_dup_vs_history + res.n_dup_within
+        return res.n_new, res.n_dup_vs_history + res.n_dup_within
 
-    q = (
-        stream_vectors(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(dedup_batch)
-        .start()
+    run = run_fold_stream(
+        stream_vectors(spark, source_dir, max_files_per_trigger),
+        checkpoint_dir,
+        dedup_batch,
     )
-    q.awaitTermination()
     return StreamEmbeddingDedupReport(
-        n_batches=totals["batches"],
-        n_new=totals["new"],
-        n_dropped=totals["dropped"],
+        n_batches=run.n_batches,
+        n_new=sum(new for new, _ in run.outputs),
+        n_dropped=sum(dropped for _, dropped in run.outputs),
         n_kept_total=store.count(kept_table),
         n_indexed_total=store.count(index_table),
     )

@@ -50,6 +50,7 @@ from ..operators.expectations import (
     check_expectations,
 )
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -262,10 +263,8 @@ def run_expectations_gate_stream(
     breaking any hard rule to quarantine (tagged), accepts the rest.
     See the module docstring for the replay protocol and scope."""
     _validate_hard(rules, hard_rule_ids)  # fail before starting a query
-    totals = {"batches": 0}
-
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        n = expectations_gate_fold(
+    def gate(batch: DataFrame, batch_id: int) -> int:
+        return expectations_gate_fold(
             batch,
             store,
             rules,
@@ -276,20 +275,12 @@ def run_expectations_gate_stream(
             audit_table=audit_table,
             watermark_table=watermark_table,
         )
-        if n > 0:
-            totals["batches"] += 1
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(gate)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        gate,
     )
-    q.awaitTermination()
     n_acc = store.count(accepted_table) if store.exists(accepted_table) else 0
     n_q = (
         store.count(quarantine_table)
@@ -309,7 +300,7 @@ def run_expectations_gate_stream(
         )
     )
     return ExpectationsStreamReport(
-        n_batches=totals["batches"],
+        n_batches=sum(1 for n in run.outputs if n > 0),
         n_accepted=n_acc,
         n_quarantined=n_q,
         audit=audit,

@@ -63,6 +63,7 @@ from ..operators.retrieval import (
     forget_term_documents,
 )
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -93,10 +94,8 @@ def run_forget_stream(
     estate was folded with — the retroactive report recompute derives
     span extents from ``k`` (a mismatched k silently rewrites every
     holder's span lengths at the wrong granularity)."""
-    totals = {"batches": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         ids = batch.select(id_col).distinct()
         if store.exists(ledger_table):
             ids = ids.join(store.read(ledger_table), id_col, "left_anti")
@@ -145,17 +144,11 @@ def run_forget_stream(
         # crash before this line replays them all to no-ops
         store.append_new(ids, ledger_table, key=id_col)
 
-    q = (
-        spark.readStream.schema(f"{id_col} long")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, f"{id_col} long", max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     fams = []
     if store.exists("dedup_kept_docs") or store.current_version(
         "minhash_sig_index"
@@ -173,7 +166,7 @@ def run_forget_stream(
         fams.append("positional")
     n_req = store.count(ledger_table) if store.exists(ledger_table) else 0
     return ForgetStreamReport(
-        n_batches=totals["batches"],
+        n_batches=run.n_batches,
         n_requests=n_req,
         families=tuple(fams),
     )

@@ -52,6 +52,7 @@ from ..operators.lm import (
     read_calibration,
 )
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -100,10 +101,8 @@ def run_gate_stream(
     the reference slice — see :func:`calibrate_quality_gate`); leave
     None for the exact full-slice re-score while the trusted slice
     stays small."""
-    totals = {"batches": 0, "ref": 0, "kept": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         docs = batch.select(id_col, text_col).localCheckpoint(eager=True)
         ref = docs.filter(F.col(id_col) % ref_mod == 0)
         pool = docs.filter(F.col(id_col) % ref_mod != 0)
@@ -122,7 +121,7 @@ def run_gate_stream(
                 "reference-bearing file first"
             )
         if has_ref:
-            c = calibrate_quality_gate(
+            calibrate_quality_gate(
                 store,
                 ref,
                 id_col=id_col,
@@ -132,10 +131,9 @@ def run_gate_stream(
                 calib_table=calib_table,
                 max_ref_sample=max_ref_sample,
             )
-            totals["ref"] = c.n_ref
         store.append_new(docs, docs_table, id_col)
         if pool.limit(1).count() > 0:
-            totals["kept"] += gate_pool_batch(
+            gate_pool_batch(
                 pool,
                 store,
                 id_col=id_col,
@@ -145,19 +143,13 @@ def run_gate_stream(
                 scores_table=scores_table,
             )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     if not store.exists(docs_table):
-        return GateStreamReport(totals["batches"], 0, 0, 0, None, None, None)
+        return GateStreamReport(run.n_batches, 0, 0, 0, None, None, None)
     # report path is READ-ONLY (ADVICE r08): every ref-bearing fold
     # already committed its calibration snapshot, so the stored row IS
     # the calibration in force — reading it derives nothing, bumps no
@@ -183,7 +175,7 @@ def run_gate_stream(
     # (ADVICE r08: a restart run with no new refs used to report
     # n_ref_folded=0 while n_docs_seen stayed all-time)
     return GateStreamReport(
-        n_batches=totals["batches"],
+        n_batches=run.n_batches,
         n_ref_folded=store.count(ref_table),
         n_docs_seen=seen.count(),
         n_kept_online=online.count() if online is not None else 0,

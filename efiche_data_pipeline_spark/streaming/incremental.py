@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from ..functions.numeric import money_sum
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 EVENTS_STREAM_SCHEMA = (
     "event_id long, user_id long, event_type string, ts timestamp_ntz,"
@@ -74,11 +75,7 @@ def stream_events(spark: SparkSession, source_dir: str, max_files_per_trigger: i
     and is relabelled to event-time LTZ via :func:`ensure_event_time`.
     ``maxFilesPerTrigger`` bounds micro-batch size — the streaming
     analogue of the reference's ``LIMIT 5000`` (etl_pipeline.py:131)."""
-    raw = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
+    raw = parquet_stream(spark, source_dir, EVENTS_STREAM_SCHEMA, max_files_per_trigger)
     return ensure_event_time(raw, "ts")
 
 
@@ -129,29 +126,30 @@ def run_incremental_stream(
     agg = hourly_event_counts(
         stream_events(spark, source_dir, max_files_per_trigger), watermark
     )
-    n_batches = 0
+    run = run_fold_stream(
+        agg, checkpoint_dir, window_merge_fold(store, table), output_mode="update"
+    )
+    return run.n_batches
+
+
+def window_merge_fold(store: Store, table: str):
+    """The micro-batch fold of the windowed-aggregate streams: merge the
+    batch's window rows into ``table`` keyed on (hour_start,
+    event_type), so a replayed batch converges."""
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        # merge_upsert runs >1 action over `batch`; persist so the
-        # stateful micro-batch plan executes once per batch instead of
-        # once per action (same lever as streaming/late.py).
+        # merge_upsert runs >1 action over `batch`; without a persist
+        # each action RE-EXECUTES the stateful micro-batch plan (and
+        # double-counts numRowsDroppedByWatermark in streaming/late.py:
+        # 2 late rows were reported as 4). Pin the batch for the
+        # sink's lifetime so the state operator runs exactly once.
         batch.persist()
         try:
             store.merge_upsert(batch, table, keys=["hour_start", "event_type"])
         finally:
             batch.unpersist()
 
-    q = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(merge)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
+    return merge
 
 
 def deduped_event_stream(

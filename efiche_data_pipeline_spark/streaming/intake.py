@@ -44,6 +44,7 @@ from ..operators.dedup import incremental_minhash_dedup
 from ..operators.sketch import incremental_dataset_card
 from ..pipeline.store import Store
 from .curation import stream_documents
+from .driver import run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -74,10 +75,7 @@ def run_intake_stream(
     the first run (the held-out set is fixed per release)."""
     from ..operators.dedup import incremental_decontamination
 
-    totals = {"batches": 0}
-
     def intake_batch(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         docs = batch
         if canonicalize:
             from ..functions.text import canonical_text
@@ -132,19 +130,15 @@ def run_intake_stream(
         if kept_docs.limit(1).count() > 0:
             incremental_dataset_card(kept_docs, store)
 
-    q = (
-        stream_documents(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(intake_batch)
-        .start()
+    run = run_fold_stream(
+        stream_documents(spark, source_dir, max_files_per_trigger),
+        checkpoint_dir,
+        intake_batch,
     )
-    q.awaitTermination()
     from ..operators.sketch import _card_row
 
     return IntakeStreamReport(
-        n_batches=totals["batches"],
+        n_batches=run.n_batches,
         n_contaminated_total=(
             store.read(flags_table).filter("contaminated").count()
             if store.exists(flags_table)

@@ -60,11 +60,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 from ..pipeline.store import Store
-from .incremental import hourly_event_counts, stream_events
+from .driver import run_fold_stream
+from .incremental import hourly_event_counts, stream_events, window_merge_fold
 
 
 class _DropCountListener(StreamingQueryListener):
@@ -125,46 +126,23 @@ def run_with_late_accounting(
     agg = hourly_event_counts(
         stream_events(spark, source_dir, max_files_per_trigger), watermark
     )
-    n_batches = 0
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        # The keyed merge runs >1 action over `batch`; without a
-        # persist each action RE-EXECUTES the stateful micro-batch
-        # plan, double-counting numRowsDroppedByWatermark (observed:
-        # 2 late rows reported as 4). Pin the batch for the sink's
-        # lifetime so the state operator runs exactly once.
-        batch.persist()
-        try:
-            store.merge_upsert(batch, table, keys=["hour_start", "event_type"])
-        finally:
-            batch.unpersist()
-
     listener = _DropCountListener()
     spark.streams.addListener(listener)
     try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .foreachBatch(merge)
-            .start()
-        )
-        q.awaitTermination()
+        run = run_fold_stream(agg, checkpoint_dir, window_merge_fold(store, table))
         # Per-batch drop counts, from TWO sources united by batch id:
         # recentProgress is updated synchronously per trigger but is a
         # ring buffer (may have evicted early batches of a long
         # backlog); the listener sees every batch but is delivered
         # asynchronously (the very last event can still be in flight
-        # right after awaitTermination). recentProgress wins where
+        # right after the query drains). recentProgress wins where
         # both have a batch; the listener fills the evicted prefix.
         per_batch: dict[int, int] = {}
-        qid = str(q.id)
+        qid = str(run.query.id)
         for (lid, bid), d in listener.drops.items():
             if lid == qid:
                 per_batch[bid] = d
-        for progress in q.recentProgress:
+        for progress in run.query.recentProgress:
             total = 0
             for sop in progress.get("stateOperators") or []:
                 total += int(sop.get("numRowsDroppedByWatermark") or 0)
@@ -172,7 +150,7 @@ def run_with_late_accounting(
     finally:
         spark.streams.removeListener(listener)
     return LateReport(
-        n_batches=n_batches,
+        n_batches=run.n_batches,
         n_dropped_late=sum(per_batch.values()),
         watermark=watermark,
     )

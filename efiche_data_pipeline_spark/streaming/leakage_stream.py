@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import incremental_split_leakage
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -51,10 +52,8 @@ def run_leakage_stream(
     ``source_dir``: each micro-batch runs the intake-time leakage
     check against the persisted signature index; the returned report
     reflects every file seen across all runs of this checkpoint."""
-    totals = {"batches": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         incremental_split_leakage(
             batch, store,
             leakage_table=leakage_table, id_col=id_col, text_col=text_col,
@@ -62,17 +61,11 @@ def run_leakage_stream(
             train_pct=train_pct, val_pct=val_pct,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     report = (
         store.read(leakage_table).select(
             "doc_a", "doc_b", "split_a", "split_b"
@@ -80,4 +73,4 @@ def run_leakage_stream(
         if store.exists(leakage_table)
         else None
     )
-    return LeakageStreamReport(n_batches=totals["batches"], report=report)
+    return LeakageStreamReport(n_batches=run.n_batches, report=report)

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.lm import incremental_lm, lm_model_from_store, ngram_lm_score
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 _EMPTY_MODEL_SCHEMA = "kind string, w1 string, w2 string, cnt long"
 
@@ -85,10 +86,8 @@ def run_lm_stream(
     """availableNow consumption of parquet document files under
     ``source_dir``; the returned report reflects every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0, "folded": 0}
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
+    def fold(batch: DataFrame, batch_id: int) -> int:
         docs = batch.select(id_col, text_col).localCheckpoint(eager=True)
         # 1. model fold (atomic, self-watermarked)
         r = incremental_lm(
@@ -98,7 +97,6 @@ def run_lm_stream(
             text_col=text_col,
             model_table=model_table,
         )
-        totals["folded"] += r.n_new
         # 2. intake record (idempotent keyed append)
         store.append_new(docs, docs_table, id_col)
         # 3. online scores, tagged with the scoring model version
@@ -111,25 +109,20 @@ def run_lm_stream(
             F.lit(-1 if version is None else int(version)).cast("long"),
         )
         store.append_new(scored, scores_table, id_col)
+        return r.n_new
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     if not store.exists(docs_table):
-        return LmStreamReport(totals["batches"], totals["folded"], 0, None, None)
+        return LmStreamReport(run.n_batches, sum(run.outputs), 0, None, None)
     seen = store.read(docs_table)
     model = current_lm_model(spark, store, model_table).localCheckpoint(eager=True)
     return LmStreamReport(
-        n_batches=totals["batches"],
-        n_docs_folded=totals["folded"],
+        n_batches=run.n_batches,
+        n_docs_folded=sum(run.outputs),
         n_docs_seen=seen.count(),
         report=ngram_lm_score(seen, model, id_col, text_col),
         online_scores=store.read(scores_table),

@@ -26,6 +26,7 @@ from ..operators.sketch import (
     temperature_mixture_result,
 )
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -52,10 +53,8 @@ def run_mixture_stream(
     """availableNow consumption of parquet document files under
     ``source_dir``; the returned selection reflects every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         incremental_temperature_mixture(
             batch.localCheckpoint(eager=True),
             store,
@@ -66,21 +65,15 @@ def run_mixture_stream(
             stats_table=stats_table,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     if not store.exists(stats_table):
-        return MixtureStreamReport(totals["batches"], 0, None)
+        return MixtureStreamReport(run.n_batches, 0, None)
     return MixtureStreamReport(
-        n_batches=totals["batches"],
+        n_batches=run.n_batches,
         n_docs_seen=store.read(stats_table).count(),
         selection=temperature_mixture_result(store, total_budget, stats_table=stats_table),
     )

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from ..operators.bpe import FORGOTTEN_MARKER
 from ..operators.sketch import incremental_ngram_counts, ngram_heavy_hitters
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -80,15 +81,13 @@ def run_ngram_stream(
     """availableNow consumption of parquet document files under
     ``source_dir``; folds each batch's gram counts and returns the
     heavy-hitter read over everything ever seen."""
-    totals = {"batches": 0, "docs": 0}
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
+    def fold(batch: DataFrame, batch_id: int) -> int:
         stats = batch.agg(
             F.min(id_col).alias("mn"), F.max(id_col).alias("mx")
         ).first()
         if stats["mx"] is None:
-            return
+            return 0
         mn, mx = int(stats["mn"]), int(stats["mx"])
         committed: set[int] = set()
         wm = None
@@ -120,7 +119,7 @@ def run_ngram_stream(
                         "the overlap and skipping it would under-count "
                         "the rest"
                     )
-                return  # crash-replay of an already-committed batch
+                return 0  # crash-replay of an already-committed batch
             raise ValueError(
                 f"ngram stream batch {batch_id} (ids {mn}..{mx}) is "
                 f"below the fold watermark {wm} and matches no "
@@ -135,21 +134,15 @@ def run_ngram_stream(
                 "writer contract is violated; refusing before any "
                 "commit (the fold would silently drop the low ids)"
             )
-        totals["docs"] += incremental_ngram_counts(
+        return incremental_ngram_counts(
             batch, store, id_col, text_col, n, counts_table
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     hh = None
     n_state = 0
     if store.current_version(counts_table) is not None:
@@ -165,8 +158,8 @@ def run_ngram_stream(
             .count()
         )
     return NgramStreamReport(
-        n_batches=totals["batches"],
-        n_docs_folded=totals["docs"],
+        n_batches=run.n_batches,
+        n_docs_folded=sum(run.outputs),
         n_grams_state=n_state,
         heavy_hitters=hh,
     )

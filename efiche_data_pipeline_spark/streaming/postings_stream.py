@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 
 from ..operators.retrieval import incremental_term_postings
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -53,11 +54,9 @@ def run_postings_stream(
     """availableNow consumption of parquet document files under
     ``source_dir``; folds each batch into the postings estate and
     returns the all-time indexed-doc count."""
-    totals = {"batches": 0, "docs": 0}
 
-    def fold(batch, batch_id: int) -> None:
-        totals["batches"] += 1
-        totals["docs"] += incremental_term_postings(
+    def fold(batch, batch_id: int) -> int:
+        return incremental_term_postings(
             batch,
             store,
             id_col=id_col,
@@ -67,25 +66,19 @@ def run_postings_stream(
             seen_table=seen_table,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     n_indexed = (
         store.read(seen_table).select("_id").distinct().count()
         if store.exists(seen_table)
         else 0
     )
     return PostingsStreamReport(
-        n_batches=totals["batches"],
-        n_docs_folded=totals["docs"],
+        n_batches=run.n_batches,
+        n_docs_folded=sum(run.outputs),
         n_docs_indexed=n_indexed,
     )
 
@@ -111,11 +104,8 @@ def run_positional_postings_stream(
     the crash matrix is the fold's (tests/test_retrieval.py)."""
     from ..operators.retrieval import incremental_positional_postings
 
-    totals = {"batches": 0, "docs": 0}
-
-    def fold(batch, batch_id: int) -> None:
-        totals["batches"] += 1
-        totals["docs"] += incremental_positional_postings(
+    def fold(batch, batch_id: int) -> int:
+        return incremental_positional_postings(
             batch,
             store,
             id_col=id_col,
@@ -124,24 +114,18 @@ def run_positional_postings_stream(
             seen_table=seen_table,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     n_indexed = (
         store.read(seen_table).select("_id").distinct().count()
         if store.exists(seen_table)
         else 0
     )
     return PostingsStreamReport(
-        n_batches=totals["batches"],
-        n_docs_folded=totals["docs"],
+        n_batches=run.n_batches,
+        n_docs_folded=sum(run.outputs),
         n_docs_indexed=n_indexed,
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.sketch import incremental_quantiles, sample_quantiles
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -47,28 +48,20 @@ def run_quantile_stream(
     (``schema`` describes them): each micro-batch folds into the
     persisted sample; the returned estimates reflect every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         incremental_quantiles(
             batch, store, group_cols, key_col, value_col,
             k=k, table=table, quantiles=quantiles,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     return QuantileStreamReport(
-        n_batches=totals["batches"],
+        n_batches=run.n_batches,
         estimates=sample_quantiles(
             store.read_version(table), group_cols, quantiles
         ),

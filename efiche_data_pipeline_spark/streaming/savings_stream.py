@@ -19,10 +19,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.sketch import dedup_savings_result, incremental_dedup_savings
+from ..operators.watermark import check_monotone_ids
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -47,40 +48,16 @@ def run_savings_stream(
     """availableNow consumption of parquet document files under
     ``source_dir``; the returned report reflects every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0, "folded": 0}
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
+    def fold(batch: DataFrame, batch_id: int) -> int:
         ids = batch.select(id_col).distinct().localCheckpoint(eager=True)
-        # Enforce the fold's monotone-id contract HERE, where
-        # violations enter (file discovery order is mtime order, not
-        # id order): an id at-or-below the sums watermark that is NOT
-        # in the ids sink means an earlier file carried higher ids —
-        # its docs would be silently dropped from the report. The ids
-        # sink commits BEFORE the operator, so a crash-replay (ids
-        # present) never false-alarms.
-        if store.current_version("savings_sums") is not None and store.exists(
-            "savings_ids"
-        ):
-            wm = (
-                store.read_union("savings_sums")
-                .agg(F.max("batch_max_id"))
-                .first()[0]
-            )
-            unseen_low = ids.filter(F.col(id_col) <= wm).join(
-                store.read("savings_ids"), id_col, "left_anti"
-            )
-            if unseen_low.count() > 0:
-                raise ValueError(
-                    f"monotone-{id_col} contract violated: batch "
-                    f"{batch_id} carries never-seen ids at or below the "
-                    f"sums watermark {wm} — an earlier file carried "
-                    "higher ids. Feed files in id order."
-                )
+        # the ids sink commits BEFORE the operator, so a crash-replay
+        # (ids present) never trips the guard
+        check_monotone_ids(store, ids, id_col, "savings_sums", "savings_ids")
         store.append_new(ids, "savings_ids", id_col)
         # no outer checkpoint: the operator pins its own watermark-
         # filtered batch, and this frame has exactly one consumer
-        totals["folded"] += incremental_dedup_savings(
+        return incremental_dedup_savings(
             batch,
             store,
             id_col=id_col,
@@ -88,23 +65,17 @@ def run_savings_stream(
             text_col=text_col,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     # the sums table is LAYERED (append_version), so presence is a
     # committed version, not a plain _SUCCESS marker
     if store.current_version("savings_sums") is None:
-        return SavingsStreamReport(totals["batches"], totals["folded"], None)
+        return SavingsStreamReport(run.n_batches, sum(run.outputs), None)
     return SavingsStreamReport(
-        n_batches=totals["batches"],
-        n_docs_folded=totals["folded"],
+        n_batches=run.n_batches,
+        n_docs_folded=sum(run.outputs),
         report=dedup_savings_result(store),
     )

@@ -40,7 +40,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.bpe import (
     BpeResult,
@@ -49,7 +48,9 @@ from ..operators.bpe import (
     incremental_vocab,
     vocab_from_store,
 )
+from ..operators.watermark import check_monotone_ids
 from ..pipeline.store import Store
+from .driver import parquet_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -79,77 +80,14 @@ def run_vocab_stream(
     """availableNow consumption of parquet document files under
     ``source_dir``; the returned report reflects every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0, "folded": 0}
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
+    def fold(batch: DataFrame, batch_id: int) -> int:
         docs = batch.select(id_col, text_col).localCheckpoint(eager=True)
-        # Enforce incremental_vocab's monotone-id contract BEFORE any
-        # commit, where violations actually enter (file discovery
-        # order is not id order): an id at-or-below the vocab
-        # watermark that is NOT in the docs sink means an earlier file
-        # carried higher ids — its words would never enter the vocab.
-        # Raising here commits NOTHING, so a genuine violation leaves
-        # zero partial state; a crash-replay (ids present in the sink,
-        # committed below before the vocab) never false-alarms.
-        if store.current_version(vocab_table) is not None and store.exists(
-            docs_table
-        ):
-            from ..operators.bpe import FORGOTTEN_MARKER
-
-            wm = (
-                store.read_union(vocab_table)
-                .agg(F.max("batch_max_id"))
-                .first()[0]
-            )
-            unseen_low = docs.filter(F.col(id_col) <= wm).join(
-                store.read(docs_table).select(id_col), id_col, "left_anti"
-            )
-            n_unseen = unseen_low.count()
-            if n_unseen > 0:
-                # Upgrade edge (the pre-r08 commit order was vocab
-                # delta FIRST, docs sink second): a checkpoint that
-                # crashed between those two commits replays here with
-                # every id at-or-below the watermark and absent from
-                # the sink — under the NEW order that pattern would
-                # mean a genuine violation, but for the old-crash
-                # batch it is recovery. The two are distinguishable
-                # because ids are unique across the corpus: only the
-                # fold of THIS batch can have stamped this batch's
-                # own max id as a layer's batch_max_id. When (a) the
-                # whole batch is sink-absent, (b) its max id is at or
-                # below the watermark, and (c) that max id IS a layer
-                # watermark (marker rows excluded — forget stamps the
-                # forgotten id on its freq=0 ledger rows), fall
-                # through: the sink append below backfills the docs,
-                # and incremental_vocab's own watermark filter folds
-                # nothing twice. Requires the batch⇆file mapping to
-                # be stable across the upgrade (availableNow +
-                # unchanged maxFilesPerTrigger — the checkpoint
-                # contract); a REGROUPED replay cannot be told apart
-                # from a violation and still raises — repair that by
-                # re-running with the original trigger size.
-                batch_max = docs.agg(F.max(id_col)).first()[0]
-                layer_wms = {
-                    r[0]
-                    for r in store.read_union(vocab_table)
-                    .filter(F.col("word") != FORGOTTEN_MARKER)
-                    .select("batch_max_id")
-                    .distinct()
-                    .collect()
-                }
-                crashed_sink_replay = (
-                    n_unseen == docs.count()
-                    and batch_max <= wm
-                    and batch_max in layer_wms
-                )
-                if not crashed_sink_replay:
-                    raise ValueError(
-                        f"monotone-{id_col} contract violated: batch "
-                        f"{batch_id} carries never-seen ids at or below "
-                        f"the vocab watermark {wm} — an earlier file "
-                        "carried higher ids. Feed files in id order."
-                    )
+        # incremental_vocab's monotone-id contract, checked BEFORE any
+        # commit (file discovery order is not id order): a violation
+        # leaves zero partial state, and a crash-replay never trips it
+        # because its ids are already in the sink committed below.
+        check_monotone_ids(store, docs, id_col, vocab_table, docs_table)
         # Docs sink FIRST (idempotent), vocab delta LAST: the only
         # crash window (between the two) replays with the ids present
         # in the sink and still above the vocab watermark, so the
@@ -158,26 +96,20 @@ def run_vocab_stream(
         r = incremental_vocab(
             docs, store, id_col=id_col, text_col=text_col, vocab_table=vocab_table
         )
-        totals["folded"] += r.n_new
+        return r.n_new
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    run = run_fold_stream(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        fold,
     )
-    q.awaitTermination()
     if not store.exists(docs_table):
-        return VocabStreamReport(totals["batches"], totals["folded"], 0, None, None)
+        return VocabStreamReport(run.n_batches, sum(run.outputs), 0, None, None)
     seen = store.read(docs_table)
     res = bpe_learn(vocab_from_store(store, vocab_table), n_merges)
     return VocabStreamReport(
-        n_batches=totals["batches"],
-        n_docs_folded=totals["folded"],
+        n_batches=run.n_batches,
+        n_docs_folded=sum(run.outputs),
         n_docs_seen=seen.count(),
         bpe=res,
         token_counts=bpe_token_counts(seen, res.vocab, id_col, text_col),

@@ -41,3 +41,28 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(QUERIES) == set(e.queries())
+
+
+def test_money_avg_rounds_half_way_up(spark):
+    """3571.60 / 80 = 44.645 exactly; as a double it is 44.64499…, so
+    rounding the double quotient gives 44.64. The Spark helper, its
+    Spark-SQL form and the DuckDB oracle must all give the half-up
+    44.65."""
+    import duckdb
+    import pandas as pd
+
+    from efiche_data_pipeline_spark.functions.numeric import (
+        money_avg,
+        oracle_money_avg,
+    )
+    from efiche_data_pipeline_spark.plans.sql_api import _ma
+
+    rows = [(44.60,)] * 40 + [(44.69,)] * 40
+    df = spark.createDataFrame(rows, "v double")
+    assert df.agg(money_avg("v").alias("a")).first()["a"] == 44.65
+    df.createOrReplaceTempView("money_avg_half_way")
+    got = spark.sql(f"SELECT {_ma('v')} AS a FROM money_avg_half_way").first()["a"]
+    assert got == 44.65
+    pdf = pd.DataFrame(rows, columns=["v"])  # noqa: F841 — read by DuckDB
+    got = duckdb.sql(f"SELECT {oracle_money_avg('v')} FROM pdf").fetchone()[0]
+    assert got == 44.65

@@ -419,26 +419,31 @@ def test_delete_commit_preserves_concurrently_appended_layer(spark, tmp_path):
     assert store.read_union("t").count() == 9 + 10 + 5
 
 
-def test_legacy_underscore_version_layout_migrates(spark, tmp_path):
-    """A store written by the pre-round-6 layout (_v<N> version dirs)
-    is healed on first access: versions() reports the committed
-    history, read_version resolves the _CURRENT pointer, and the next
-    write claims the correct slot instead of re-claiming slot 1."""
-    import os
+def test_store_doubles_accept_base_parameters():
+    """Every Store subclass under tests/ (module-level or nested in a
+    test) accepts each parameter of the Store method it overrides, so
+    a Store API change cannot leave a crash-injection double behind."""
+    import ast
+    import inspect
+    import pathlib
 
-    root = str(tmp_path / "legacy")
-    store = Store(spark, root)
-    mk = lambda tag: spark.createDataFrame([(1, tag)], "id long, tag string")
-    store.write_version(mk("a"), "t")
-    store.write_version(mk("b"), "t")
-    for d in list(os.listdir(store.path("t"))):
-        if d.startswith("v") and d[1:].isdigit():
-            os.rename(
-                os.path.join(store.path("t"), d),
-                os.path.join(store.path("t"), "_" + d),
-            )
-    fresh = Store(spark, root)
-    assert fresh.versions("t") == [1, 2]
-    assert fresh.read_version("t").first()["tag"] == "b"
-    assert fresh.write_version(mk("c"), "t") == 3
-    assert fresh.read_version("t", 1).first()["tag"] == "a"
+    n_doubles, drift = 0, []
+    for path in sorted(pathlib.Path(__file__).parent.glob("test_*.py")):
+        for cls in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(cls, ast.ClassDef) or not any(
+                isinstance(b, ast.Name) and b.id == "Store" for b in cls.bases
+            ):
+                continue
+            n_doubles += 1
+            for fn in cls.body:
+                if not isinstance(fn, ast.FunctionDef) or fn.name == "__init__":
+                    continue
+                if not hasattr(Store, fn.name) or fn.args.kwarg:
+                    continue
+                a = fn.args
+                have = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                want = set(inspect.signature(getattr(Store, fn.name)).parameters)
+                if want - have:
+                    drift.append((path.name, cls.name, fn.name, sorted(want - have)))
+    assert n_doubles >= 10, n_doubles
+    assert not drift, drift

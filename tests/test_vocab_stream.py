@@ -245,52 +245,3 @@ def test_out_of_order_files_fail_loudly(spark, tmp_path):
         run_vocab_stream(spark, src, _SCHEMA, store, ckpt, n_merges=_MERGES)
     # and nothing diverged: the violating batch committed neither side
     assert store.read("bpe_docs").count() == 6
-
-
-def test_old_order_crash_checkpoint_survives_upgrade(spark, tmp_path):
-    """ADVICE r08: a checkpoint that crashed under the PRE-r08 commit
-    order (vocab delta committed, docs sink not yet appended) must
-    survive the ordering change: on replay those ids sit at-or-below
-    the vocab watermark and are absent from the sink — the exact
-    pattern the monotone guard raises on — but the batch's own max id
-    is a committed layer watermark (ids are unique, so only this
-    batch's fold can have stamped it), which identifies the window.
-    The stream must let the batch through, backfill the sink, and
-    fold nothing twice."""
-    from efiche_data_pipeline_spark.operators.bpe import incremental_vocab
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    store = Store(spark, str(tmp_path / "store"))
-    _write(spark, src, _rows(0, 6))
-    run_vocab_stream(spark, src, _SCHEMA, store, ckpt, n_merges=_MERGES)
-    v1 = store.current_version("bpe_vocab")
-
-    # simulate the OLD order's crash window for the next file (ids
-    # 7-9; id 6 deliberately NEVER folded, for the violation below):
-    # vocab delta committed, sink append never ran, checkpoint unaware
-    crashed = spark.createDataFrame(_rows(7, 10), _SCHEMA)
-    incremental_vocab(crashed, store)
-    assert store.current_version("bpe_vocab") == v1 + 1
-    assert store.read("bpe_docs").count() == 6
-
-    # upgrade + restart: the replayed batch must NOT trip the guard
-    _write(spark, src, _rows(7, 10))
-    rep = run_vocab_stream(spark, src, _SCHEMA, store, ckpt, n_merges=_MERGES)
-    # sink backfilled, vocab folded exactly once (no double counts)
-    assert store.read("bpe_docs").count() == 9
-    assert store.current_version("bpe_vocab") == v1 + 1
-    assert rep.n_docs_seen == 9
-    want_merges, want_counts = _global(spark, _rows(0, 6) + _rows(7, 10))
-    assert _merge_rows(rep.bpe.merges) == want_merges
-    assert _count_rows(rep.token_counts) == want_counts
-
-    # and a GENUINE violation still raises after the exemption: the
-    # never-folded gap id 6 is below the watermark, absent from the
-    # sink, and its max is NO layer's watermark — it cannot
-    # impersonate a crashed batch
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    _write(spark, src, [(6, _doc(6))])
-    with pytest.raises(StreamingQueryException, match="monotone"):
-        run_vocab_stream(spark, src, _SCHEMA, store, ckpt, n_merges=_MERGES)
